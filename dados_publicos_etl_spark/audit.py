@@ -10,9 +10,11 @@ Spark-first replacement:
 - counts ride along with the job via ``df.observe`` (zero extra
   scans — the reference's eager ``df.count()`` at script.py:49 cost a
   full extra pass);
-- when a layer must be audited at rest, one distributed
-  ``spark.read...agg(count, countDistinct(input_file_name()))`` job
-  replaces the serial per-file loop;
+- when a layer must be audited at rest, the file count comes from
+  the listing the scan already holds (``df.inputFiles()``, no job) and
+  the row count from one ``count()`` over a scan read with an empty
+  schema (no schema inference, no columns decoded), replacing the
+  serial per-file loop;
 - the audit row is an append-mode single-row DataFrame with the
   reference's exact schema (schemas.MONITORING).
 """
@@ -24,6 +26,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from dados_publicos_etl_spark.schemas import MONITORING
 
@@ -46,20 +49,22 @@ def observe_counts(df: DataFrame, name: str = "audit") -> tuple[DataFrame, Obser
 
 def count_layer(spark: SparkSession, path: str, fmt: str = "parquet",
                 **options) -> tuple[int, int]:
-    """(n_files, n_rows) of a storage layer in ONE distributed job
-    (reference: serial pandas loop, monitor.py:70-121)."""
-    df = spark.read.format(fmt).options(**options).load(path)
-    # project input_file_name() first: Spark 4 rejects nondeterministic
-    # expressions directly inside aggregate functions.
-    row = (
-        df.select(F.input_file_name().alias("_file"))
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.countDistinct("_file").alias("files"),
-        )
-        .head()
+    """(n_files, n_rows) of a storage layer with one ``count()``
+    (reference: serial pandas loop, monitor.py:70-121).
+
+    A count needs no columns, so the layer is read with an empty
+    schema: no schema-inference job, and a layer holding no data file
+    (only ``_SUCCESS``) counts ``(0, 0)`` instead of raising
+    ``UNABLE_TO_INFER_SCHEMA``.  ``n_files`` is the number of data
+    files listed under ``path`` (hidden and ``_``-prefixed files
+    excluded), the reference's A4 rule of counting non-directory blobs
+    (monitor.py:102-121) — a 0-row part file counts as a file.
+    """
+    df = (
+        spark.read.format(fmt).schema(StructType()).options(**options)
+        .load(path)
     )
-    return int(row["files"]), int(row["rows"])
+    return len(df.inputFiles()), df.count()
 
 
 def _now() -> str:

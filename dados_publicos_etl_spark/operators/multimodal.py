@@ -592,6 +592,29 @@ def dhash64(img) -> int:
     )
 
 
+def _synth_image(i, n_groups: int, base_cache: dict):
+    """Image ``i``: the base pattern of group ``i % n_groups`` with
+    per-image salt-and-pepper noise seeded by ``i``.  Each group's base
+    is generated once per task into ``base_cache`` (bit-identical: same
+    seed)."""
+    import numpy as np
+
+    g = int(i) % n_groups
+    base = base_cache.get(g)
+    if base is None:
+        base = np.random.RandomState(17 + g).randint(
+            0, 256, (IMG_H, IMG_W, 3)
+        ).astype("uint8")
+        base_cache[g] = base
+    noise = np.random.RandomState(int(i))
+    n_flip = int(noise.randint(0, 40))
+    ys = noise.randint(0, IMG_H, n_flip)
+    xs = noise.randint(0, IMG_W, n_flip)
+    img = base.copy()
+    img[ys, xs] = 255 - img[ys, xs]
+    return img
+
+
 def synth_images(
     df: DataFrame, id_col: str = "doc_id", n_groups: int = 50
 ) -> DataFrame:
@@ -604,29 +627,13 @@ def synth_images(
     planted duplicate-group SIZE — and thus true pair count — grow
     linearly, i.e. quadratic total pairs; real corpora hold dup-
     cluster size roughly constant as they grow)."""
-    import numpy as np
-
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         base_cache: dict[int, object] = {}
         for pdf in batches:
-            payloads = []
-            for i in pdf[id_col]:
-                g = int(i) % n_groups
-                base = base_cache.get(g)
-                if base is None:
-                    # each group's base generated once per task, not
-                    # once per image (bit-identical: same seed)
-                    base = np.random.RandomState(17 + g).randint(
-                        0, 256, (IMG_H, IMG_W, 3)
-                    ).astype("uint8")
-                    base_cache[g] = base
-                noise = np.random.RandomState(int(i))
-                n_flip = int(noise.randint(0, 40))
-                ys = noise.randint(0, IMG_H, n_flip)
-                xs = noise.randint(0, IMG_W, n_flip)
-                img = base.copy()
-                img[ys, xs] = 255 - img[ys, xs]
-                payloads.append(encode_ppm(img))
+            payloads = [
+                encode_ppm(_synth_image(i, n_groups, base_cache))
+                for i in pdf[id_col]
+            ]
             yield pd.DataFrame(
                 {id_col: pdf[id_col].to_numpy(),
                  "payload": pd.Series(payloads, dtype=object)}
@@ -675,27 +682,14 @@ def synth_image_hashes(
     unfused pair (pytest-pinned) — and the payload never leaves the
     Python worker.  One worker per task, one Arrow hop of skinny
     (id, dhash) rows out."""
-    import numpy as np  # noqa: F401  (dhash64/synth path needs it)
-
     def gen_hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         base_cache: dict[int, object] = {}
         for pdf in batches:
-            hs = []
-            for i in pdf[id_col]:
-                g = int(i) % n_groups
-                base = base_cache.get(g)
-                if base is None:
-                    base = np.random.RandomState(17 + g).randint(
-                        0, 256, (IMG_H, IMG_W, 3)
-                    ).astype("uint8")
-                    base_cache[g] = base
-                noise = np.random.RandomState(int(i))
-                n_flip = int(noise.randint(0, 40))
-                ys = noise.randint(0, IMG_H, n_flip)
-                xs = noise.randint(0, IMG_W, n_flip)
-                img = base.copy()
-                img[ys, xs] = 255 - img[ys, xs]
-                hs.append(dhash64(decode_image(encode_ppm(img))))
+            hs = [
+                dhash64(decode_image(encode_ppm(
+                    _synth_image(i, n_groups, base_cache))))
+                for i in pdf[id_col]
+            ]
             yield pd.DataFrame(
                 {id_col: pdf[id_col].to_numpy(),
                  "dhash": pd.Series(hs, dtype="int64")}

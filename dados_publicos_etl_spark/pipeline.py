@@ -5,7 +5,8 @@ only via storage paths (/root/reference/dag.py:164; no XCom).  Here a
 pipeline is ordered stages inside ONE SparkSession: each stage is
 DataFrame -> DataFrame, so intermediate layer writes become optional
 checkpoints instead of mandatory hops, and audit hooks ride along via
-``df.observe`` instead of re-scanning.
+``df.observe`` instead of re-scanning: an audited run of N stages is
+one Spark action, not N.
 
 The reference's full DAG re-expressed (see
 tests/test_reference_pipeline.py for the executable version):
@@ -20,13 +21,12 @@ tests/test_reference_pipeline.py for the executable version):
 
 from __future__ import annotations
 
-import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-from dados_publicos_etl_spark.audit import AuditResult, observe_counts
+from dados_publicos_etl_spark.audit import observe_counts
 
 
 @dataclass
@@ -39,7 +39,6 @@ class Stage:
 class StageRun:
     stage: str
     rows: int
-    seconds: float
 
 
 @dataclass
@@ -62,27 +61,24 @@ class Pipeline:
     def run(self, df: DataFrame) -> tuple[DataFrame, list[StageRun]]:
         """Apply stages in order; audit rows-through per stage.
 
-        Each stage boundary forces an action only because we audit it;
-        use :func:`run_stages` instead when you want a single fused
-        Catalyst plan with no intermediate actions (the scale-default).
+        Each stage's output carries its own ``Observation``, and the
+        next stage is applied on top of it, so ONE ``noop`` write
+        flows every row through every stage once and fills all the
+        counts.  Returns the last stage's (observed) DataFrame; use
+        :func:`run_stages` instead when you want no audit and no
+        action at all (the scale-default).
         """
-        runs: list[StageRun] = []
-        cur = df
-        for st in self.stages:
-            t0 = time.perf_counter()
-            out = st.fn(cur)
-            observed, obs = observe_counts(out, f"{self.name}.{st.name}")
-            # cheapest possible action that still flows every row
-            # through the observation
-            observed.write.format("noop").mode("overwrite").save()
-            runs.append(
-                StageRun(
-                    st.name,
-                    int(obs.get["qtd_rows"]),
-                    round(time.perf_counter() - t0, 4),
-                )
-            )
-            cur = out
+        cur, observed = df, []
+        # the stage index keeps metric names unique within the one plan
+        # even when two stages share a name
+        for i, st in enumerate(self.stages):
+            cur, obs = observe_counts(
+                st.fn(cur), f"{self.name}.{i}.{st.name}")
+            observed.append((st.name, obs))
+        # cheapest possible action that still flows every row through
+        # every observation
+        cur.write.format("noop").mode("overwrite").save()
+        runs = [StageRun(n, int(obs.get["qtd_rows"])) for n, obs in observed]
         return cur, runs
 
 

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from dados_publicos_etl_spark import audit
@@ -19,10 +22,89 @@ def test_observe_counts_no_extra_scan(spark, sf_dir):
     assert obs.get["qtd_rows"] == n == 25
 
 
-def test_count_layer_matches_direct_count(spark, sf_dir):
-    files, rows = audit.count_layer(spark, f"{sf_dir}/region.parquet")
-    assert files == 1
-    assert rows == spark.read.parquet(f"{sf_dir}/region.parquet").count()
+def _region_layer(tmp_path):
+    return f"{SF_SMOKE}/region.parquet", "parquet", {}, (1, 5)
+
+
+def _pipe_csv_layer(tmp_path):
+    """Two '|' CSV files with a header, a blank line and a quoted
+    delimiter."""
+    d = tmp_path / "csv"
+    d.mkdir()
+    (d / "part-0.csv").write_text('A|B\n1|"x|y"\n\n2|z\n')
+    (d / "part-1.csv").write_text('A|B\n3|"q|r"\n4|s\n5|t\n')
+    return str(d), "csv", {"sep": "|", "header": "true"}, (2, 5)
+
+
+def _hive_parquet_layer(tmp_path):
+    """Three ``yr=`` partitions of two files each, 100 rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "hive"
+    ids = iter(range(100))
+    for yr, sizes in ((2020, (10, 20)), (2021, (15, 15)), (2022, (5, 35))):
+        (d / f"yr={yr}").mkdir(parents=True)
+        for k, n in enumerate(sizes):
+            tbl = pa.table({"id": [next(ids) for _ in range(n)]})
+            pq.write_table(tbl, str(d / f"yr={yr}" / f"part-{k}.parquet"))
+    return str(d), "parquet", {}, (6, 100)
+
+
+def _empty_part_parquet_layer(tmp_path):
+    """Two data parts (2 + 3 rows) next to a 0-row part.  QTD_FILES
+    counts the listed data files (reference A4), so the empty part
+    counts as a file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "empty_part"
+    d.mkdir()
+    for k, ids in enumerate(([1, 2], [3, 4, 5], [])):
+        tbl = pa.table({"id": pa.array(ids, pa.int64())})
+        pq.write_table(tbl, str(d / f"part-{k}.parquet"))
+    (d / "_SUCCESS").touch()
+    return str(d), "parquet", {}, (3, 5)
+
+
+def _duckdb_rows(path, fmt, options):
+    import duckdb
+
+    if fmt == "csv":
+        src = (f"read_csv('{path}/*.csv', delim='{options['sep']}', "
+               "header=true, quote='\"')")
+    else:
+        glob = f"{path}/**/*.parquet" if os.path.isdir(path) else path
+        src = f"read_parquet('{glob}', hive_partitioning=true)"
+    return duckdb.sql(f"SELECT count(*) FROM {src}").fetchone()[0]
+
+
+@pytest.mark.parametrize(
+    "layer",
+    [_region_layer, _pipe_csv_layer, _hive_parquet_layer,
+     _empty_part_parquet_layer],
+    ids=["region", "pipe_csv", "hive_parquet", "empty_part_parquet"],
+)
+def test_count_layer_matches_direct_count(spark, tmp_path, layer):
+    path, fmt, options, expected = layer(tmp_path)
+    files, rows = audit.count_layer(spark, path, fmt=fmt, **options)
+    assert (files, rows) == expected
+    assert rows == _duckdb_rows(path, fmt, options)
+
+
+def test_count_layer_empty_layer(spark, tmp_path):
+    """A layer dir holding only ``_SUCCESS`` (an empty write) audits as
+    (0, 0) files/rows instead of failing schema inference."""
+    layer = tmp_path / "layer"
+    layer.mkdir()
+    (layer / "_SUCCESS").touch()
+    assert audit.count_layer(spark, str(layer)) == (0, 0)
+    sink = str(tmp_path / "monitoring")
+    res = audit.audit_layer(spark, "dados-publicos", "refined",
+                            str(layer), sink_path=sink)
+    assert (res.qtd_files, res.qtd_rows) == (0, 0)
+    row = spark.read.parquet(sink).head()
+    assert (row.STEP, row.QTD_FILES, row.QTD_ROWS) == ("refined", 0, 0)
 
 
 def test_monitoring_row_schema_and_sink(spark, tmp_path):
@@ -59,6 +141,36 @@ def test_pipeline_stage_audit(spark, sf_dir):
     assert out.columns == ["o_orderkey", "o_totalprice"]
 
 
+def test_pipeline_run_is_one_action(spark, sf_dir):
+    """An audited 3-stage run is ONE Spark job, and each stage's
+    observed count equals that stage's own count, also when two
+    stages share a name."""
+    from dados_publicos_etl_spark.io import read_table
+
+    df = read_table(spark, sf_dir, "orders")
+    pipe = (
+        Pipeline("one_action")
+        .add("filter", lambda d: d.filter(F.col("o_orderstatus") == "O"))
+        .add("filter", lambda d: d.filter(F.col("o_totalprice") > 100000))
+        .add("project", lambda d: d.select("o_orderkey", "o_totalprice"))
+    )
+    sc = spark.sparkContext
+    group = "test_pipeline_run_is_one_action"
+    sc.setJobGroup(group, "Pipeline.run single action")
+    try:
+        _, runs = pipe.run(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    cur, want = df, []
+    for st in pipe.stages:
+        cur = st.fn(cur)
+        want.append(cur.count())
+    assert [r.rows for r in runs] == want
+    assert want[0] > want[1] > 0
+
+
 def test_run_stages_fuses_without_actions(spark, sf_dir):
     from dados_publicos_etl_spark.io import read_table
 
@@ -74,7 +186,6 @@ def test_run_stages_fuses_without_actions(spark, sf_dir):
 def test_catalog_md_matches_registry():
     """CATALOG.md is generated from the registry; a stale copy means
     the judge-facing inventory lies about the query surface."""
-    import os
     import re
 
     from dados_publicos_etl_spark.plans import QUERIES
@@ -96,7 +207,6 @@ def test_tempdir_pool_rolls_and_cleans():
     (older ones deleted as new ones arrive) and cleanup_all removes
     everything — the bounded replacement for the per-round tempdir
     keep-lists the r5 ADVICE flagged."""
-    import os
 
     from dados_publicos_etl_spark.tmpstore import TempDirPool
 
