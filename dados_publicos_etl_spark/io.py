@@ -20,28 +20,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def parquet_ts_unit(path: str, col: str = "ts") -> str | None:
-    """Sniff the physical timestamp unit ('ns'|'us'|'ms'|'s') of ``col``
-    from a parquet footer (file or directory-of-files).
-
-    The streaming readers declare ``col`` as ``long`` (so NANOS files
-    are readable at all under ``nanosAsLong``) and must then rescale
-    the raw int64 to microseconds — but the right divisor depends on
-    the unit the WRITER used, which only the footer knows.  Hardcoding
-    one unit is how you land every window in 1970.  Footer read is a
-    driver-side metadata peek, not a data scan.
-
-    Returns None when the column isn't a timestamp (already numeric).
-    """
-    return parquet_ts_meta(path, col)[0]
-
-
 def parquet_ts_meta(path: str, col: str = "ts") -> tuple[str | None, str | None]:
-    """Like :func:`parquet_ts_unit` but returns ``(unit, tz)`` — the
-    tz annotation distinguishes parquet TIMESTAMP adjusted-to-UTC
-    (tz set, Spark reads TIMESTAMP) from wall-time NTZ (tz None,
-    Spark reads TIMESTAMP_NTZ); readers that branch their declared
-    schema on the unit need both."""
+    """Sniff ``(unit, tz)`` of timestamp ``col`` from a parquet footer
+    (file or directory-of-files): the physical unit
+    ('ns'|'us'|'ms'|'s', None when the column is plain numeric) and
+    the tz annotation.
+
+    Readers that declare ``col`` as ``long`` (so NANOS files are
+    readable at all under ``nanosAsLong``) must rescale the raw int64
+    by the unit the WRITER used, which only the footer knows;
+    hardcoding one unit is how you land every window in 1970.  The tz
+    distinguishes parquet TIMESTAMP adjusted-to-UTC (tz set, Spark
+    reads TIMESTAMP) from wall-time NTZ (tz None, Spark reads
+    TIMESTAMP_NTZ).  A footer read is a driver-side metadata peek,
+    not a data scan."""
     import pyarrow.parquet as pq
 
     if os.path.isdir(path):
@@ -59,7 +51,7 @@ def epoch_micros_sql(col: str, unit: str | None) -> str:
     double precision, so float division would drift by up to 1 us.
 
     ``unit=None`` means the column is a plain numeric (not a parquet
-    timestamp at all — :func:`parquet_ts_unit` returns None then); it
+    timestamp at all — the unit :func:`parquet_ts_meta` returns); it
     is treated as ALREADY epoch micros, the engine's wire convention.
     """
     scale = {

@@ -3,19 +3,32 @@
 ``foreachBatch`` hands each micro-batch to arbitrary DataFrame code
 (MERGE, multi-sink fan-out, warehouse loads) with the batch_id for
 exactly-once bookkeeping.  This is the streaming equivalent of the
-reference's per-layer load steps (/root/reference/src/utils/
-load_bq.py): each batch is a "layer load" with idempotency keyed on
-batch_id.
+reference's per-layer load steps (``src/utils/load_bq.py`` in the
+reference pipeline): each batch is a "layer load" with idempotency
+keyed on batch_id.
+
+The catalog queries here are the mergeable-state family: each streams
+the same 2-file split of the events table (:func:`_cdc_stream`) and
+folds every micro-batch into a state table with
+``source.fold_batches``; the only per-query code is the merge law
+(counts add, latest event wins, registers take the max).  The result
+is read back eagerly from the pooled state dir.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-_RAW_EVENTS_SCHEMA = (
-    "event_id long, ts long, user_id long, event_type string, "
-    "value double, props string"
+from dados_publicos_etl_spark.io import epoch_micros_sql, parquet_ts_meta
+from dados_publicos_etl_spark.plans.registry import query
+from dados_publicos_etl_spark.streaming.source import (
+    EVENTS_RAW_SCHEMA,
+    cached_feed,
+    fold_batches,
+    read_event_stream,
+    write_parity_feed,
 )
 
 
@@ -35,7 +48,6 @@ def stream_events_foreach_batch(
     dir gives source-offset recovery; together they make the sink
     restart-safe.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     n_batches = {"n": 0}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -47,21 +59,9 @@ def stream_events_foreach_batch(
         )
         n_batches["n"] += 1
 
-    # layout-aware (see streaming/source.py): directory-layout tables
-    # stream directly, single-file layout keeps the leaf-name filter
-    import os
-
-    table = f"{sf_dir}/events.parquet"
-    if os.path.isdir(table):
-        stream = spark.readStream.schema(_RAW_EVENTS_SCHEMA).parquet(table)
-    else:
-        stream = (
-            spark.readStream.schema(_RAW_EVENTS_SCHEMA)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
     q = (
-        stream.writeStream.foreachBatch(sink)
+        read_event_stream(spark, sf_dir)
+        .writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
@@ -70,43 +70,43 @@ def stream_events_foreach_batch(
     return n_batches["n"]
 
 
-from dados_publicos_etl_spark.plans.registry import query  # noqa: E402
+def _cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table as a 2-file feed (split by ``event_id``
+    parity, ``ts`` raw), streamed one file per micro-batch: the
+    scaffolding for an external CDC feed, cached per corpus snapshot
+    so repeat runs measure the merge."""
 
-# (sf_dir,) -> TemporaryDirectory holding the 2-file split copy of
-# events used to force multiple micro-batches (scaffolding for an
-# external CDC feed; cached so repeat invocations measure the merge)
-_CDC_FEED_DIRS: dict[tuple, object] = {}
-
-# state dirs of completed runs — kept for the session so returned
-# DataFrames stay readable; removed by finalizers at interpreter exit
-_CDC_STATE_DIRS: list = []
-
-
-def _cdc_feed_dir(spark: SparkSession, sf_dir: str) -> str:
-    import tempfile
-
-    key = (sf_dir,)
-    hit = _CDC_FEED_DIRS.get(key)
-    if hit is not None:
-        return hit.name
-    tmp = tempfile.TemporaryDirectory(prefix="spark_cdc_feed_")
-    # point at the exact table path: works whether events.parquet is
-    # the testdata's single FILE or a directory of part files (the
-    # scale-probe replica layout) — a pathGlobFilter on the parent
-    # dir would match only the leaf-FILE form and feed NOTHING on a
-    # directory layout
-    src = spark.read.schema(_RAW_EVENTS_SCHEMA).parquet(
-        f"{sf_dir}/events.parquet"
-    )
-    for half in (0, 1):
-        (
-            src.filter(F.col("event_id") % 2 == half)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(tmp.name)
+    def build(out: str) -> None:
+        # point at the exact table path: works whether events.parquet
+        # is the testdata's single FILE or a directory of part files
+        # (the scale-probe replica layout) — a pathGlobFilter on the
+        # parent dir would match only the leaf-FILE form and feed
+        # NOTHING on a directory layout
+        src = spark.read.schema(EVENTS_RAW_SCHEMA).parquet(
+            f"{sf_dir}/events.parquet"
         )
-    _CDC_FEED_DIRS[key] = tmp
-    return tmp.name
+        write_parity_feed(src, "event_id", out)
+
+    feed = cached_feed("cdc", sf_dir, "events", build)
+    return (
+        spark.readStream.schema(EVENTS_RAW_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(feed)
+    )
+
+
+def _regroup(keys: list[str], merged, per_batch):
+    """Merge law of a commutative per-key aggregate: the batch's
+    ``per_batch`` rows, re-aggregated with the previous state by
+    ``merged`` (a Column over the unioned rows)."""
+
+    def merge(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
+        b = per_batch(batch)
+        if prev is None:
+            return b
+        return prev.unionByName(b).groupBy(*keys).agg(merged)
+
+    return merge
 
 
 @query(
@@ -137,17 +137,9 @@ def _cdc_feed_dir(spark: SparkSession, sf_dir: str) -> str:
     "batch never reads the file it overwrites.",
 )
 def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
+    unit = parquet_ts_meta(f"{sf_dir}/events.parquet")[0]
 
-    from dados_publicos_etl_spark.io import parquet_ts_unit, epoch_micros_sql
-    from dados_publicos_etl_spark.streaming.windows import _streaming_shuffle
-
-    feed = _cdc_feed_dir(spark, sf_dir)
-    unit = parquet_ts_unit(f"{sf_dir}/events.parquet")
-    state_tmp = tempfile.TemporaryDirectory(prefix="spark_cdc_state_")
-    state = {"path": None, "version": 0}
-
-    def upsert(batch_df: DataFrame, _bid: int) -> None:
+    def upsert(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         b = (
             batch_df.withColumn(
                 "ts_us", F.expr(epoch_micros_sql("ts", unit))
@@ -160,44 +152,24 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("last"),
             )
         )
-        if state["path"] is not None:
-            s = spark.read.parquet(state["path"]).alias("s")
-            merged = (
-                s.join(b.alias("b"), "user_id", "full_outer")
-                .select(
-                    "user_id",
-                    (
-                        F.coalesce(F.col("s.n_events"), F.lit(0))
-                        + F.coalesce(F.col("b.n_events"), F.lit(0))
-                    ).alias("n_events"),
-                    F.greatest(
-                        F.col("s.last"), F.col("b.last")
-                    ).alias("last"),
-                )
-            )
-        else:
-            merged = b
-        state["version"] += 1
-        new_path = f"{state_tmp.name}/v{state['version']}"
-        merged.write.mode("overwrite").parquet(new_path)
-        state["path"] = new_path
+        if prev is None:
+            return b
+        s = prev.alias("s")
+        return s.join(b.alias("b"), "user_id", "full_outer").select(
+            "user_id",
+            (
+                F.coalesce(F.col("s.n_events"), F.lit(0))
+                + F.coalesce(F.col("b.n_events"), F.lit(0))
+            ).alias("n_events"),
+            F.greatest(F.col("s.last"), F.col("b.last")).alias("last"),
+        )
 
-    stream = (
-        spark.readStream.schema(_RAW_EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    with _streaming_shuffle(spark):
-        q = stream.writeStream.foreachBatch(upsert).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
     # the state table is DATA-scale (one row per user) — never
-    # collect it; keep the final version's directory alive for the
-    # session (finalizer removes it at exit) and hand back the scan
-    _CDC_STATE_DIRS.append(state_tmp)
-    return spark.read.parquet(state["path"]).select(
+    # collect it; the fold hands back its checkpointed final version
+    state = fold_batches(
+        spark, _cdc_stream(spark, sf_dir), "stream_cdc_upsert", upsert
+    )
+    return state.select(
         "user_id",
         "n_events",
         F.col("last.event_type").alias("last_type"),
@@ -245,48 +217,19 @@ _SHQ_BIN = 10  # fixed value-bin width (values ~0-500 -> ~50 bins/type)
     "mergeable's merge law with the stream_cdc_upsert machinery.",
 )
 def stream_histogram_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from pyspark.sql import Window as W
-
-    from dados_publicos_etl_spark.streaming.windows import (
-        _streaming_shuffle,
+    hist = fold_batches(
+        spark,
+        _cdc_stream(spark, sf_dir),
+        "stream_histogram_quantile",
+        _regroup(
+            ["event_type", "bin"],
+            F.sum("cnt").alias("cnt"),
+            lambda b: b.groupBy(
+                "event_type",
+                F.floor(F.col("value") / _SHQ_BIN).cast("long").alias("bin"),
+            ).agg(F.count(F.lit(1)).alias("cnt")),
+        ),
     )
-
-    feed = _cdc_feed_dir(spark, sf_dir)
-    state_tmp = tempfile.TemporaryDirectory(prefix="spark_shq_state_")
-    state = {"path": None, "version": 0}
-
-    def merge_hist(batch_df: DataFrame, _bid: int) -> None:
-        b = batch_df.groupBy(
-            "event_type",
-            F.floor(F.col("value") / _SHQ_BIN).cast("long").alias("bin"),
-        ).agg(F.count(F.lit(1)).alias("cnt"))
-        if state["path"] is not None:
-            s = spark.read.parquet(state["path"])
-            b = (
-                s.unionByName(b)
-                .groupBy("event_type", "bin")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        state["version"] += 1
-        new_path = f"{state_tmp.name}/v{state['version']}"
-        b.write.mode("overwrite").parquet(new_path)
-        state["path"] = new_path
-
-    stream = (
-        spark.readStream.schema(_RAW_EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    with _streaming_shuffle(spark):
-        q = stream.writeStream.foreachBatch(merge_hist).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    _CDC_STATE_DIRS.append(state_tmp)
-    hist = spark.read.parquet(state["path"])
     wcum = W.partitionBy("event_type").orderBy("bin")
     wall = W.partitionBy("event_type")
     cum = hist.select(
@@ -358,51 +301,24 @@ def stream_histogram_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stream_histogram_quantile's bin counts).",
 )
 def stream_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from dados_publicos_etl_spark.streaming.windows import (
-        _streaming_shuffle,
+    daily = fold_batches(
+        spark,
+        _cdc_stream(spark, sf_dir),
+        "stream_kl_drift",
+        _regroup(
+            ["day", "event_type"],
+            F.sum("c").alias("c"),
+            lambda b: b.groupBy(
+                # NTZ arithmetic: timestamp_micros yields LTZ and would
+                # shift the day bucket under a non-UTC driver session
+                F.expr(
+                    "CAST(timestampadd(MICROSECOND, ts, "
+                    "TIMESTAMP_NTZ '1970-01-01 00:00:00') AS DATE)"
+                ).alias("day"),
+                "event_type",
+            ).agg(F.count(F.lit(1)).alias("c")),
+        ),
     )
-
-    feed = _cdc_feed_dir(spark, sf_dir)
-    state_tmp = tempfile.TemporaryDirectory(prefix="spark_skl_state_")
-    state = {"path": None, "version": 0}
-
-    def merge_counts(batch_df: DataFrame, _bid: int) -> None:
-        b = batch_df.groupBy(
-            # NTZ arithmetic: timestamp_micros yields LTZ and would
-            # shift the day bucket under a non-UTC driver session
-            F.expr(
-                "CAST(timestampadd(MICROSECOND, ts, "
-                "TIMESTAMP_NTZ '1970-01-01 00:00:00') AS DATE)"
-            ).alias("day"),
-            "event_type",
-        ).agg(F.count(F.lit(1)).alias("c"))
-        if state["path"] is not None:
-            s = spark.read.parquet(state["path"])
-            b = (
-                s.unionByName(b)
-                .groupBy("day", "event_type")
-                .agg(F.sum("c").alias("c"))
-            )
-        state["version"] += 1
-        new_path = f"{state_tmp.name}/v{state['version']}"
-        b.write.mode("overwrite").parquet(new_path)
-        state["path"] = new_path
-
-    stream = (
-        spark.readStream.schema(_RAW_EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    with _streaming_shuffle(spark):
-        q = stream.writeStream.foreachBatch(merge_counts).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    _CDC_STATE_DIRS.append(state_tmp)
-    daily = spark.read.parquet(state["path"])
     day_tot = daily.groupBy("day").agg(F.sum("c").alias("n_d"))
     gmix = daily.groupBy("event_type").agg(F.sum("c").alias("g"))
     n_g = daily.agg(F.sum("c")).first()[0]
@@ -467,16 +383,6 @@ _SHLL_M = 64  # portable HLL registers (p = 6), matching
     "cardinality.",
 )
 def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from dados_publicos_etl_spark.streaming.windows import (
-        _streaming_shuffle,
-    )
-
-    feed = _cdc_feed_dir(spark, sf_dir)
-    state_tmp = tempfile.TemporaryDirectory(prefix="spark_shll_state_")
-    state = {"path": None, "version": 0}
-
     def regs_of(df: DataFrame) -> DataFrame:
         h = F.md5(F.col("user_id").cast("string"))
         w = F.conv(F.substring(h, 3, 6), 16, 10).cast("long")
@@ -496,32 +402,12 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.max("r").alias("r"))
         )
 
-    def merge_regs(batch_df: DataFrame, _bid: int) -> None:
-        b = regs_of(batch_df)
-        if state["path"] is not None:
-            s = spark.read.parquet(state["path"])
-            b = (
-                s.unionByName(b)
-                .groupBy("event_type", "bucket")
-                .agg(F.max("r").alias("r"))
-            )
-        state["version"] += 1
-        new_path = f"{state_tmp.name}/v{state['version']}"
-        b.write.mode("overwrite").parquet(new_path)
-        state["path"] = new_path
-
-    stream = (
-        spark.readStream.schema(_RAW_EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
+    regs = fold_batches(
+        spark,
+        _cdc_stream(spark, sf_dir),
+        "stream_hll_distinct",
+        _regroup(["event_type", "bucket"], F.max("r").alias("r"), regs_of),
     )
-    with _streaming_shuffle(spark):
-        q = stream.writeStream.foreachBatch(merge_regs).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    _CDC_STATE_DIRS.append(state_tmp)
-    return spark.read.parquet(state["path"]).select(
+    return regs.select(
         "event_type", "bucket", F.col("r").cast("long").alias("r")
     )

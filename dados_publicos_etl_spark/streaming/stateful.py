@@ -11,15 +11,19 @@ time windows can't express.
 
 from __future__ import annotations
 
-import os
-import uuid
 from collections.abc import Iterable
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from dados_publicos_etl_spark.streaming.source import (
+    drain_to_memory,
+    read_event_stream,
+)
 
 OUTPUT_SCHEMA = "user_id long, n_events long, total_value double"
 STATE_SCHEMA = "n long, total double"
@@ -39,13 +43,22 @@ def _running_totals(
     )
 
 
+def _final_totals(snap: DataFrame) -> DataFrame:
+    """A memory sink in update mode appends every state emission; the
+    last row per user (the largest running count) is the final total."""
+    w = W.partitionBy("user_id").orderBy(F.desc("n_events"))
+    return (
+        snap.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+
+
 def streaming_running_totals(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Run the stateful operator over the events table as a stream
     (one micro-batch per file) and return the final per-user totals."""
-    from dados_publicos_etl_spark.streaming.source import read_event_stream
-
     stream = read_event_stream(spark, sf_dir, ntz=True)
     out = stream.groupBy("user_id").applyInPandasWithState(
         _running_totals,
@@ -54,28 +67,7 @@ def streaming_running_totals(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"stateful_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # memory sink in update mode appends every state emission; the
-    # last row per user is the final total.
-    snap = spark.table(name)
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        snap.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    return _final_totals(drain_to_memory(out, "update", "stateful_out"))
 
 
 # ---------------------------------------------------------------------------
@@ -146,8 +138,6 @@ def streaming_running_totals_v2(
     (leaking it would silently switch every subsequent query's state
     store).
     """
-    from dados_publicos_etl_spark.streaming.source import read_event_stream
-
     _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
     prev_provider = spark.conf.get(_PROVIDER_KEY, None)
     spark.conf.set(
@@ -164,31 +154,13 @@ def streaming_running_totals_v2(
             outputMode="Update",
             timeMode="None",
         )
-        name = f"tws_out_{uuid.uuid4().hex[:8]}"
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        snap = drain_to_memory(out, "update", "tws_out")
     finally:
         if prev_provider is None:
             spark.conf.unset(_PROVIDER_KEY)
         else:
             spark.conf.set(_PROVIDER_KEY, prev_provider)
-    snap = spark.table(name)
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        snap.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    return _final_totals(snap)
 
 
 SESSION_GAP_MIN = 30
@@ -273,15 +245,6 @@ def streaming_session_close(
         outputMode="update",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    name = f"session_close_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    # no _streaming_shuffle here: the session close is emitted by a
+    # no-data batch once the watermark passes last event + gap
+    return drain_to_memory(out, "update", "session_close")

@@ -3,16 +3,19 @@
 Batch and streaming share the same logical plan in Structured
 Streaming, so each operator here is written once against the events
 DataFrame and exercised two ways: batch (driver-checkable against a
-DuckDB oracle) and as a ``readStream`` smoke in pytest (watermark +
-window + memory sink).
+DuckDB oracle) and as a ``readStream`` query driven to completion.
+
+The streaming queries (``stream_true_streaming`` onwards) only say
+what they compute: ``streaming.source`` builds their split feeds
+(``cached_feed``), drives them (``drain`` / ``drain_to_memory``) and
+folds update-mode output into a state table (``fold_batches``; the
+keyed upsert is ``_run_update_upsert``).
 
 Window starts are epoch-aligned (Spark semantics); the oracles
 reproduce them with epoch arithmetic, so results hash-match exactly.
 """
 
 from __future__ import annotations
-
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -21,56 +24,44 @@ from pyspark.sql import functions as F
 from dados_publicos_etl_spark.functions.numeric import money_sum
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
-from dados_publicos_etl_spark.tmpstore import (
-    CACHE_LOCK as _FIX_LOCK,
-    corpus_fingerprint as _fix_fp,
+from dados_publicos_etl_spark.streaming.source import (
+    _STATE_DIRS,
+    _streaming_shuffle,
+    cached_feed,
+    drain,
+    drain_to_memory,
+    fold_batches,
+    read_event_stream,
+    write_ordered_feed,
+    write_parity_feed,
 )
-
-from dados_publicos_etl_spark.tmpstore import TempDirPool
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
 
-@contextmanager
-def _streaming_shuffle(spark: SparkSession, n: int = 4):
-    """Bound stateful-stream parallelism while a query is planned,
-    and skip no-data micro-batches for the drive-to-completion run.
+def _utc_window_start(spark: SparkSession):
+    """``window.start`` of a streaming window, rendered in UTC:
+    watermarks need TIMESTAMP (LTZ), so the bound is converted
+    explicitly to stay session-timezone-stable."""
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    return F.date_format(
+        F.to_utc_timestamp(F.col("window.start"), tz), _TS_FMT
+    ).alias("window_start")
 
-    A stateful streaming query creates one state store PER shuffle
-    partition PER stateful operator; micro-batch latency in local
-    mode is dominated by store open/commit, not data volume, so the
-    drive-to-completion queries plan with a small fixed number
-    (A/B at sf0.1 warm: 8 partitions ~1.5-4.2 s per query, 4
-    partitions ~1.1-3.0 s; below 4 it flattens).  On a
-    real cluster raise it (~2-3x executor cores) — state partitioning
-    is fixed at first checkpoint, so size it for peak key cardinality
-    up front.  The session value is restored afterwards; the stream
-    keeps the value captured at plan time.
 
-    ``noDataMicroBatches`` is disabled for the same window: after the
-    data batch, processAllAvailable otherwise waits out an EMPTY
-    batch whose only job is advancing the watermark — which none of
-    the wrapped queries need (complete-mode aggs re-emit on every
-    data batch; append-mode dedup/inner-join emit on sight/match,
-    watermark only evicts state).  A/B at sf0.1 warm: the 4
-    true-streaming queries total 5.7 s with no-data batches, 4.0 s
-    without, identical results (oracle-checked).  Operators that DO
-    emit on watermark advance (EventTimeTimeout session close —
-    ``stateful.streaming_session_close``) must not use this wrapper.
-    """
-    _NODATA_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nodata = spark.conf.get(_NODATA_KEY, None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    spark.conf.set(_NODATA_KEY, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if prev_nodata is None:
-            spark.conf.unset(_NODATA_KEY)
-        else:
-            spark.conf.set(_NODATA_KEY, prev_nodata)
+def _window_counts(
+    spark: SparkSession, stream: DataFrame, key: str, gap: str = "10 minutes"
+) -> DataFrame:
+    """Event counts per (tumbling ``gap`` window, ``key``) under a
+    1-hour watermark."""
+    return (
+        stream.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", gap), key)
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(_utc_window_start(spark), key, "n_events")
+    )
+
+
 _DUCK_BUCKET = (
     # naive-timestamp arithmetic: DuckDB's to_timestamp() returns
     # TIMESTAMPTZ and strftime would render it in the local zone,
@@ -285,26 +276,8 @@ def streaming_tumbling_counts(
     trigger.  processAllAvailable drives the file feed to completion
     synchronously (pytest / driver safe).
     """
-    from dados_publicos_etl_spark.streaming.source import read_event_stream
-
-    # the streaming file source requires a directory: stream the sf
-    # dir with a glob filter selecting the events table file(s).
-    # Watermarks require TIMESTAMP (LTZ), so unlike the batch path
-    # (NTZ) we keep instants here and render window bounds through an
-    # explicit UTC conversion so output is session-timezone-stable.
-    tz = spark.conf.get("spark.sql.session.timeZone")
-    stream = read_event_stream(spark, sf_dir)
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", gap), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.date_format(
-                F.to_utc_timestamp(F.col("window.start"), tz), _TS_FMT
-            ).alias("window_start"),
-            "event_type",
-            "n_events",
-        )
+    agg = _window_counts(
+        spark, read_event_stream(spark, sf_dir), "event_type", gap
     )
     return _run_update_upsert(
         spark, agg, ["window_start", "event_type"], "stream_true_streaming"
@@ -328,6 +301,36 @@ def stream_true_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     return streaming_tumbling_counts(spark, sf_dir)
 
 
+def _click_purchase_join(src: DataFrame, how: str = "inner") -> DataFrame:
+    """Clicks joined to the same user's purchases within 15 minutes,
+    both sides of the one ``src`` stream watermarked by 1 hour."""
+
+    def side_of(event_type: str, alias: str) -> DataFrame:
+        return (
+            src.filter(F.col("event_type") == event_type)
+            .selectExpr(
+                f"event_id AS {alias}_event_id",
+                f"user_id AS {alias}_user_id",
+                f"ts AS {alias}_ts",
+            )
+            .withWatermark(f"{alias}_ts", "1 hour")
+        )
+
+    return side_of("click", "c").join(
+        side_of("purchase", "p"),
+        F.expr(
+            "c_user_id = p_user_id AND "
+            "p_ts >= c_ts AND p_ts <= c_ts + INTERVAL 15 MINUTES"
+        ),
+        how,
+    ).select(
+        F.col("c_event_id").alias("click_event_id"),
+        F.col("p_event_id").alias("purchase_event_id"),
+        F.col("c_user_id").alias("user_id"),
+        F.expr("timestampdiff(MICROSECOND, c_ts, p_ts)").alias("gap_micros"),
+    )
+
+
 @query(
     "stream_stream_join",
     oracle="""
@@ -349,53 +352,12 @@ def stream_true_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     "interval join, which is the oracle.",
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from dados_publicos_etl_spark.streaming.source import read_event_stream
-
     # ONE streaming source, two filtered projections (stream
     # self-join): halves source listing/scan work vs two independent
     # readStream pipelines on the same path.
-    src = read_event_stream(spark, sf_dir)
-
-    def side_of(event_type: str, alias: str) -> DataFrame:
-        return (
-            src.filter(F.col("event_type") == event_type)
-            .selectExpr(
-                f"event_id AS {alias}_event_id",
-                f"user_id AS {alias}_user_id",
-                f"ts AS {alias}_ts",
-            )
-            .withWatermark(f"{alias}_ts", "1 hour")
-        )
-
-    clicks = side_of("click", "c")
-    purchases = side_of("purchase", "p")
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            "c_user_id = p_user_id AND "
-            "p_ts >= c_ts AND p_ts <= c_ts + INTERVAL 15 MINUTES"
-        ),
-    ).select(
-        F.col("c_event_id").alias("click_event_id"),
-        F.col("p_event_id").alias("purchase_event_id"),
-        F.col("c_user_id").alias("user_id"),
-        F.expr("timestampdiff(MICROSECOND, c_ts, p_ts)").alias("gap_micros"),
-    )
-    name = f"stream_join_{uuid.uuid4().hex[:8]}"
+    joined = _click_purchase_join(read_event_stream(spark, sf_dir))
     with _streaming_shuffle(spark):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
+        return drain_to_memory(joined, "append", "stream_join")
 
 
 @query(
@@ -414,30 +376,15 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "oracle.",
 )
 def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from dados_publicos_etl_spark.streaming.source import read_event_stream
-
-    stream = read_event_stream(spark, sf_dir)
     deduped = (
-        stream.withWatermark("ts", "1 hour")
+        read_event_stream(spark, sf_dir)
+        .withWatermark("ts", "1 hour")
         .select("user_id", "event_type", "ts")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
     with _streaming_shuffle(spark):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
+        return drain_to_memory(deduped, "append", "stream_dedup")
 
 
 def streaming_static_enrich(
@@ -456,10 +403,6 @@ def streaming_static_enrich(
     UPDATE-mode keyed upsert (bounded state, watermark-evicted),
     not a complete-mode memory sink.
     """
-    from dados_publicos_etl_spark.functions.numeric import money_sum
-    from dados_publicos_etl_spark.streaming.source import read_event_stream
-
-    tz = spark.conf.get("spark.sql.session.timeZone")
     stream = read_event_stream(spark, sf_dir)
     dim = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
@@ -473,12 +416,7 @@ def streaming_static_enrich(
             money_sum("value").alias("sum_value"),
         )
         .select(
-            F.date_format(
-                F.to_utc_timestamp(F.col("window.start"), tz), _TS_FMT
-            ).alias("window_start"),
-            "c_mktsegment",
-            "n_events",
-            "sum_value",
+            _utc_window_start(spark), "c_mktsegment", "n_events", "sum_value"
         )
     )
     return _run_update_upsert(
@@ -506,27 +444,9 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     return streaming_static_enrich(spark, sf_dir)
 
 
-# (sf_dir, n_queries) -> TemporaryDirectory of streaming query files;
-# held for the session, removed by the finalizer at interpreter exit
-_ANN_STREAM_QDIRS: dict[tuple, object] = {}
-
-# sink dirs of completed probe runs — kept alive so the returned
-# DataFrames stay readable; finalizers remove them at interpreter exit
-_ANN_SINK_DIRS: list = []
-
-
 def _ann_stream_query_dir(
     spark: SparkSession, emb: DataFrame, sf_dir: str, n_queries: int
 ) -> str:
-    import tempfile
-
-    key = (sf_dir, _fix_fp(sf_dir, "embeddings"), n_queries)
-    with _FIX_LOCK:
-        hit = _ANN_STREAM_QDIRS.get(key)
-    if hit is not None:
-        return hit.name
-    tmp = tempfile.TemporaryDirectory(prefix="spark_ann_stream_")
-    # two files => two micro-batches under maxFilesPerTrigger=1.
     # Each query row carries its Spark-SQL milli-quantized qq
     # alongside the raw vector, so the probe's cell choice shares
     # the one quantization site with the IVF oracle (round 8).
@@ -534,24 +454,18 @@ def _ann_stream_query_dir(
         _MILLI_QUANT_EXPR,
     )
 
-    for half in (0, 1):
-        (
-            emb.filter(
-                (F.col("vec_id") < n_queries)
-                & (F.col("vec_id") % 2 == half)
-            )
-            .select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("embedding"),
-                F.expr(_MILLI_QUANT_EXPR.format(v="embedding")).alias("qq"),
-            )
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(tmp.name)
-        )
-    with _FIX_LOCK:
-        stored = _ANN_STREAM_QDIRS.setdefault(key, tmp)
-    return stored.name
+    queries = emb.filter(F.col("vec_id") < n_queries).select(
+        "vec_id",
+        F.col("embedding").cast("array<double>").alias("embedding"),
+        F.expr(_MILLI_QUANT_EXPR.format(v="embedding")).alias("qq"),
+    )
+    return cached_feed(
+        "ann_stream",
+        sf_dir,
+        "embeddings",
+        lambda out: write_parity_feed(queries, "vec_id", out),
+        n_queries,
+    )
 
 
 def streaming_ann_probe(
@@ -600,10 +514,7 @@ def streaming_ann_probe(
     # a serving stream runs indefinitely, so accumulating results on
     # the driver is unbounded state by construction.  The returned
     # DataFrame is a scan of the sink — data-scale stays distributed.
-    import tempfile
-
-    sink_tmp = tempfile.TemporaryDirectory(prefix="spark_ann_sink_")
-    _ANN_SINK_DIRS.append(sink_tmp)
+    sink = _STATE_DIRS.new_dir("stream_ann_probe", "spark_ann_sink_")
 
     def probe_batch(bdf: DataFrame, bid: int) -> None:
         # query vectors per batch are a handful of rows (the serving
@@ -614,19 +525,15 @@ def streaming_ann_probe(
                 spark, path, centroids, q, n_probe=4, k=5,
                 index_df=index_df,
             )
-            res.write.mode("overwrite").parquet(
-                f"{sink_tmp.name}/batch_id={bid}"
-            )
+            res.write.mode("overwrite").parquet(f"{sink}/batch_id={bid}")
 
     with _streaming_shuffle(spark):
-        q = stream.writeStream.foreachBatch(probe_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drain(stream.writeStream.foreachBatch(probe_batch))
+    # eager: the pool rotates the sink dir out (see fold_batches)
     return (
-        spark.read.parquet(sink_tmp.name)
+        spark.read.parquet(sink)
         .select("query_id", "neighbor_id", "cos_sim", "rank")
+        .localCheckpoint(eager=True)
     )
 
 
@@ -653,20 +560,15 @@ def stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return streaming_ann_probe(spark, sf_dir)
 
 
-# sf_dir -> TemporaryDirectory of the time-split 2-file event feed;
-# cached so repeat invocations measure the stream, not the fixture
-_TOPK_FEED_DIRS: dict[str, object] = {}
-# state dirs of completed runs — bounded rolling pool (the returned
-# DataFrame reads the final version lazily; by the time a dir rotates
-# out, that query's result has long been collected)
-_STATE_DIRS = TempDirPool()
-# run metadata of the most recent stream_topk_windows execution
-# (output mode, batch count, streaming progress) — pytest pins the
-# watermark-eviction claim against this
-_TOPK_LAST_RUN: dict = {}
-# query name -> run metadata for every update-upsert drive-to-
-# completion run (same shape as _TOPK_LAST_RUN)
-_STREAM_LAST_RUNS: dict[str, dict] = {}
+def _keyed_upsert(
+    prev: DataFrame | None, new: DataFrame, keys: list[str]
+) -> DataFrame:
+    """``prev`` with the rows of ``new`` replacing those of equal
+    ``keys``: update mode emits each changed key with its CURRENT
+    value, so an upsert is delete-matching-keys + insert."""
+    if prev is None:
+        return new
+    return prev.join(new, keys, "left_anti").unionByName(new)
 
 
 def _run_update_upsert(
@@ -675,56 +577,40 @@ def _run_update_upsert(
     keys: list[str],
     purpose: str,
 ) -> DataFrame:
-    """Drive an UPDATE-mode streaming aggregation to completion via a
-    ``foreachBatch`` keyed upsert into a versioned parquet state
-    table, and return the final state as a batch DataFrame.
+    """Drive an UPDATE-mode streaming aggregation to completion as a
+    keyed-upsert :func:`fold_batches`, and return the final state as a
+    batch DataFrame (empty, with ``agg``'s schema, if no batch ran)."""
+    out = fold_batches(
+        spark, agg, purpose, lambda prev, b: _keyed_upsert(prev, b, keys)
+    )
+    return out if out is not None else spark.createDataFrame([], agg.schema)
 
-    This is the bounded-state sink shape every drive-to-completion
-    query in this package uses (see ``stream_cdc_upsert``): update
-    mode emits only the keys whose aggregate changed in the batch —
-    each carrying its CURRENT value, so the upsert is
-    delete-matching-keys + insert — and the watermark EVICTS closed
-    windows from the state store (complete mode would retain every
-    key forever and re-emit the whole result each trigger — the
-    unbounded anti-pattern).  Run metadata (mode, batch count,
-    streaming progress incl. ``numRowsRemoved``) lands in
-    ``_STREAM_LAST_RUNS[purpose]``.
-    """
-    state_dir = _STATE_DIRS.new_dir(purpose, f"spark_{purpose}_")
-    state: dict = {"path": None, "version": 0}
 
-    def upsert(bdf: DataFrame, _bid: int) -> None:
-        if state["path"] is not None:
-            s = spark.read.parquet(state["path"])
-            merged = s.join(bdf, keys, "left_anti").unionByName(bdf)
-        else:
-            merged = bdf
-        state["version"] += 1
-        new_path = f"{state_dir}/v{state['version']}"
-        merged.write.mode("overwrite").parquet(new_path)
-        state["path"] = new_path
+def _events_us(spark: SparkSession, sf_dir: str, *cols: str):
+    """``(events, lo, hi)``: ``event_id``, ``ts`` as epoch-micros
+    ``ts_us`` and ``cols`` of the events table, with the min and max
+    of ``ts_us``."""
+    ev = read_table(spark, sf_dir, "events").select(
+        "event_id",
+        F.expr(
+            "timestampdiff(MICROSECOND, "
+            "TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
+        ).alias("ts_us"),
+        *cols,
+    )
+    lo, hi = ev.agg(F.min("ts_us"), F.max("ts_us")).first()
+    return ev, lo, hi
 
-    with _streaming_shuffle(spark):
-        q = agg.writeStream.outputMode("update").foreachBatch(upsert).start()
-        try:
-            q.processAllAvailable()
-            _STREAM_LAST_RUNS[purpose] = {
-                "output_mode": "update",
-                "n_batches": state["version"],
-                "progress": list(q.recentProgress or []),
-            }
-        finally:
-            q.stop()
-    if state["path"] is None:
-        return spark.createDataFrame([], agg.schema)
-    # EAGERLY materialize off the pooled state dir: the TempDirPool
-    # rotates this dir out after 8 newer runs of the same purpose, so
-    # a lazily-returned parquet read deferred past that would hit an
-    # unreadable path — localCheckpoint pins the rows in block storage
+
+def _ordered_stream(spark: SparkSession, feed: str, schema: str) -> DataFrame:
+    """One micro-batch per file of a :func:`write_ordered_feed` feed,
+    ``ts_us`` as the event-time ``ts``."""
     return (
-        spark.read.parquet(state["path"])
-        .select(*agg.columns)
-        .localCheckpoint(eager=True)
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(feed)
+        .withColumn("ts", F.timestamp_micros("ts_us"))
     )
 
 
@@ -739,48 +625,13 @@ def _topk_feed_dir(spark: SparkSession, sf_dir: str) -> str:
     by event_id parity — would interleave times and force the
     watermark to hold ALL state until the end, hiding eviction.)
     """
-    import os as _os
-    import tempfile
 
-    key = (sf_dir, _fix_fp(sf_dir, "events"))
-    with _FIX_LOCK:
-        hit = _TOPK_FEED_DIRS.get(key)
-    if hit is not None:
-        return hit.name
-    tmp = tempfile.TemporaryDirectory(prefix="spark_topk_feed_")
-    ev = read_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.expr(
-            "timestampdiff(MICROSECOND, "
-            "TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-        ).alias("ts_us"),
-        "user_id",
-    )
-    lo, hi = ev.agg(F.min("ts_us"), F.max("ts_us")).first()
-    mid = (lo + hi) // 2
-    # ONE write pass instead of two filtered writes: a single
-    # coalesced task splits rows into half=0/half=1 directories
-    # (partitionBy on write is a per-task file split, no shuffle).
-    # The consumer reads with recursiveFileLookup, so `half` stays a
-    # directory name, not a column.
-    (
-        ev.withColumn("half", (F.col("ts_us") > mid).cast("int"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .partitionBy("half")
-        .parquet(tmp.name)
-    )
-    # pin file order for the mtime-ordered source: half 1 newer
-    for half in (0, 1):
-        d = _os.path.join(tmp.name, f"half={half}")
-        for f in _os.listdir(d):
-            if f.endswith(".parquet"):
-                p = _os.path.join(d, f)
-                st = _os.stat(p)
-                _os.utime(p, (st.st_atime, st.st_mtime + half * 600))
-    with _FIX_LOCK:
-        stored = _TOPK_FEED_DIRS.setdefault(key, tmp)
-    return stored.name
+    def build(out: str) -> None:
+        ev, lo, hi = _events_us(spark, sf_dir, "user_id")
+        half = (F.col("ts_us") > (lo + hi) // 2).cast("int")
+        write_ordered_feed(ev.withColumn("half", half), "half", out)
+
+    return cached_feed("topk", sf_dir, "events", build)
 
 
 @query(
@@ -837,36 +688,19 @@ def stream_topk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     result equals the batch oracle — and (b) the watermark advanced
     by batch 0 evicts most of file 0's windows during batch 1, which
     the pytest pins via ``numRowsRemoved`` in the run's progress
-    (captured in ``_TOPK_LAST_RUN``).
+    (captured in ``source._STREAM_LAST_RUNS``).
     """
-    from pyspark.sql import Window as W
-
-    tz = spark.conf.get("spark.sql.session.timeZone")
-    feed = _topk_feed_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema("event_id long, ts_us long, user_id long")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(feed)
-        .withColumn("ts", F.timestamp_micros("ts_us"))
-    )
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "10 minutes"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.date_format(
-                F.to_utc_timestamp(F.col("window.start"), tz), _TS_FMT
-            ).alias("window_start"),
-            "user_id",
-            "n_events",
-        )
+    stream = _ordered_stream(
+        spark,
+        _topk_feed_dir(spark, sf_dir),
+        "event_id long, ts_us long, user_id long",
     )
     sink = _run_update_upsert(
-        spark, agg, ["window_start", "user_id"], "stream_topk_windows"
+        spark,
+        _window_counts(spark, stream, "user_id"),
+        ["window_start", "user_id"],
+        "stream_topk_windows",
     )
-    _TOPK_LAST_RUN.clear()
-    _TOPK_LAST_RUN.update(_STREAM_LAST_RUNS["stream_topk_windows"])
     rk = F.row_number().over(
         W.partitionBy("window_start").orderBy(
             F.desc("n_events"), "user_id"
@@ -888,9 +722,6 @@ def stream_topk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Late-data drop semantics, oracle-checked
 # ---------------------------------------------------------------------------
 
-# sf_dir -> TemporaryDirectory of the REVERSE-time 2-file feed
-_LATE_FEED_DIRS: dict[str, object] = {}
-
 
 def _late_feed_dir(spark: SparkSession, sf_dir: str) -> str:
     """Events split at the epoch-micros midpoint like the topk feed,
@@ -899,59 +730,30 @@ def _late_feed_dir(spark: SparkSession, sf_dir: str) -> str:
     earlier-half event arrives hours LATE relative to the advanced
     watermark.  This is the deterministic late-data fixture: which
     rows are late is a pure function of the data."""
-    import os as _os
-    import tempfile
 
-    key = (sf_dir, _fix_fp(sf_dir, "events"))
-    with _FIX_LOCK:
-        hit = _LATE_FEED_DIRS.get(key)
-    if hit is not None:
-        return hit.name
-    tmp = tempfile.TemporaryDirectory(prefix="spark_late_feed_")
-    ev = read_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.expr(
-            "timestampdiff(MICROSECOND, "
-            "TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-        ).alias("ts_us"),
-        "event_type",
-    )
-    lo, hi = ev.agg(F.min("ts_us"), F.max("ts_us")).first()
-    mid = (lo + hi) // 2
-    mid3 = (mid + hi) // 2
-    # THREE files: the later half split in two — batch 0 = its older
-    # part (mid, mid3], batch 1 = its newest part (mid3, hi] — then
-    # the earlier half last.  Two properties make this race-free:
-    # (a) batch 1's events are NEWER than any watermark batch 0 can
-    # set (max(batch0) - delay = mid3 - 1h), so whether the engine
-    # pipelines batch construction past the watermark commit or not,
-    # no KEPT row is ever late; (b) by the time batch 2 runs, at
-    # least batch 0's commit has advanced the watermark to
-    # mid3 - 1h, which is hours past every earlier-half window
-    # (the half-gap is a quarter of the corpus time span), so ALL
-    # of batch 2 drops deterministically.
-    (
-        ev.withColumn(
-            "batch",
+    def build(out: str) -> None:
+        ev, lo, hi = _events_us(spark, sf_dir, "event_type")
+        mid = (lo + hi) // 2
+        mid3 = (mid + hi) // 2
+        # THREE files: the later half split in two — batch 0 = its
+        # older part (mid, mid3], batch 1 = its newest part (mid3, hi]
+        # — then the earlier half last.  Two properties make this
+        # race-free: (a) batch 1's events are NEWER than any watermark
+        # batch 0 can set (max(batch0) - delay = mid3 - 1h), so
+        # whether the engine pipelines batch construction past the
+        # watermark commit or not, no KEPT row is ever late; (b) by
+        # the time batch 2 runs, at least batch 0's commit has
+        # advanced the watermark to mid3 - 1h, which is hours past
+        # every earlier-half window (the half-gap is a quarter of the
+        # corpus time span), so ALL of batch 2 drops deterministically.
+        batch = (
             F.when(F.col("ts_us") > mid3, 1)
             .when(F.col("ts_us") > mid, 0)
-            .otherwise(2),
+            .otherwise(2)
         )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .partitionBy("batch")
-        .parquet(tmp.name)
-    )
-    for b in (0, 1, 2):
-        d = _os.path.join(tmp.name, f"batch={b}")
-        for f in _os.listdir(d):
-            if f.endswith(".parquet"):
-                p = _os.path.join(d, f)
-                st = _os.stat(p)
-                _os.utime(p, (st.st_atime, st.st_mtime + b * 600))
-    with _FIX_LOCK:
-        stored = _LATE_FEED_DIRS.setdefault(key, tmp)
-    return stored.name
+        write_ordered_feed(ev.withColumn("batch", batch), "batch", out)
+
+    return cached_feed("late", sf_dir, "events", build)
 
 
 @query(
@@ -983,38 +785,22 @@ def _late_feed_dir(spark: SparkSession, sf_dir: str) -> str:
     "now late-drop, each MEASURED rather than asserted.",
 )
 def stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tz = spark.conf.get("spark.sql.session.timeZone")
-    feed = _late_feed_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema("event_id long, ts_us long, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(feed)
-        .withColumn("ts", F.timestamp_micros("ts_us"))
-    )
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "10 minutes"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.date_format(
-                F.to_utc_timestamp(F.col("window.start"), tz), _TS_FMT
-            ).alias("window_start"),
-            "event_type",
-            "n_events",
-        )
+    stream = _ordered_stream(
+        spark,
+        _late_feed_dir(spark, sf_dir),
+        "event_id long, ts_us long, event_type string",
     )
     return _run_update_upsert(
-        spark, agg, ["window_start", "event_type"], "stream_late_drop"
+        spark,
+        _window_counts(spark, stream, "event_type"),
+        ["window_start", "event_type"],
+        "stream_late_drop",
     )
 
 
 # ---------------------------------------------------------------------------
 # Stream-stream LEFT OUTER join with oracle-checked eviction semantics
 # ---------------------------------------------------------------------------
-
-# sf_dir -> TemporaryDirectory of the 3-batch outer-join feed
-_OUTER_FEED_DIRS: dict[str, object] = {}
 
 
 def _outer_feed_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -1032,66 +818,38 @@ def _outer_feed_dir(spark: SparkSession, sf_dir: str) -> str:
     The streaming output therefore equals the plain batch left join —
     the oracle.  (r13: previously the first sentinel pair was its own
     batch — four micro-batches for the same rows.)"""
-    import os as _os
-    import tempfile
 
-    key = (sf_dir, _fix_fp(sf_dir, "events"))
-    with _FIX_LOCK:
-        hit = _OUTER_FEED_DIRS.get(key)
-    if hit is not None:
-        return hit.name
-    tmp = tempfile.TemporaryDirectory(prefix="spark_outer_feed_")
-    ev = read_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.expr(
-            "timestampdiff(MICROSECOND, "
-            "TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-        ).alias("ts_us"),
-        "user_id",
-        "event_type",
-    )
-    lo, hi = ev.agg(F.min("ts_us"), F.max("ts_us")).first()
-    mid = (lo + hi) // 2
-    adv = int(hi) + 2 * 3_600_000_000  # max(ts) + 2h
-    # r13 (one fewer micro-batch, identical output): the first
-    # click+purchase sentinel pair rides IN the newer-half file
-    # instead of its own batch.  The watermark committed at the end
-    # of batch 1 is then already min-over-sides(max(ts)+2h) - 1h =
-    # max(ts)+1h — an hour past every real join window — so one
-    # final sentinel batch (batch 2) suffices to flush every
-    # unmatched click.  Inner matches are unaffected (they emit on
-    # sight within addBatch; all real rows still arrive in event-time
-    # order, nothing is ever late), so the sink table is
-    # row-identical to the 4-batch feed — oracle-checked.
-    sentinels = spark.createDataFrame(
-        [
-            (-1, adv, -1, "click", 1),
-            (-2, adv, -2, "purchase", 1),
-            (-3, adv, -3, "click", 2),
-        ],
-        "event_id long, ts_us long, user_id long, event_type string,"
-        " batch int",
-    )
-    (
-        ev.withColumn(
-            "batch", F.when(F.col("ts_us") <= mid, 0).otherwise(1)
+    def build(out: str) -> None:
+        ev, lo, hi = _events_us(spark, sf_dir, "user_id", "event_type")
+        mid = (lo + hi) // 2
+        adv = int(hi) + 2 * 3_600_000_000  # max(ts) + 2h
+        # r13 (one fewer micro-batch, identical output): the first
+        # click+purchase sentinel pair rides IN the newer-half file
+        # instead of its own batch.  The watermark committed at the
+        # end of batch 1 is then already min-over-sides(max(ts)+2h)
+        # - 1h = max(ts)+1h — an hour past every real join window —
+        # so one final sentinel batch (batch 2) suffices to flush
+        # every unmatched click.  Inner matches are unaffected (they
+        # emit on sight within addBatch; all real rows still arrive in
+        # event-time order, nothing is ever late), so the sink table
+        # is row-identical to the 4-batch feed — oracle-checked.
+        sentinels = spark.createDataFrame(
+            [
+                (-1, adv, -1, "click", 1),
+                (-2, adv, -2, "purchase", 1),
+                (-3, adv, -3, "click", 2),
+            ],
+            "event_id long, ts_us long, user_id long, event_type string,"
+            " batch int",
         )
-        .unionByName(sentinels)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .partitionBy("batch")
-        .parquet(tmp.name)
-    )
-    for b in (0, 1, 2):
-        d = _os.path.join(tmp.name, f"batch={b}")
-        for f in _os.listdir(d):
-            if f.endswith(".parquet"):
-                p = _os.path.join(d, f)
-                st = _os.stat(p)
-                _os.utime(p, (st.st_atime, st.st_mtime + b * 600))
-    with _FIX_LOCK:
-        stored = _OUTER_FEED_DIRS.setdefault(key, tmp)
-    return stored.name
+        batch = F.when(F.col("ts_us") <= mid, 0).otherwise(1)
+        write_ordered_feed(
+            ev.withColumn("batch", batch).unionByName(sentinels),
+            "batch",
+            out,
+        )
+
+    return cached_feed("outer", sf_dir, "events", build)
 
 
 @query(
@@ -1128,32 +886,11 @@ def _outer_feed_dir(spark: SparkSession, sf_dir: str) -> str:
     "whose join window has provably closed.",
 )
 def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    feed = _outer_feed_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts_us long, user_id long, event_type string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(feed)
-        .withColumn("ts", F.timestamp_micros("ts_us"))
+    stream = _ordered_stream(
+        spark,
+        _outer_feed_dir(spark, sf_dir),
+        "event_id long, ts_us long, user_id long, event_type string",
     )
-
-    def side_of(event_type: str, alias: str) -> DataFrame:
-        return (
-            stream.filter(F.col("event_type") == event_type)
-            .selectExpr(
-                f"event_id AS {alias}_event_id",
-                f"user_id AS {alias}_user_id",
-                f"ts AS {alias}_ts",
-            )
-            .withWatermark(f"{alias}_ts", "1 hour")
-        )
-
-    clicks = side_of("click", "c")
-    purchases = side_of("purchase", "p")
     # NOTE: no sentinel filter inside the streaming plan — a
     # `c_user_id >= 0` here would be PUSHED DOWN through the
     # watermark node into the parquet scan, where row-group stats
@@ -1161,46 +898,16 @@ def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # watermark never advances and no outer row ever flushes
     # (measured: sentinel batches read 0 rows).  Sentinels are
     # filtered from the SINK table instead.
-    joined = (
-        clicks.join(
-            purchases,
-            F.expr(
-                "c_user_id = p_user_id AND "
-                "p_ts >= c_ts AND p_ts <= c_ts + INTERVAL 15 MINUTES"
-            ),
-            "leftOuter",
-        )
-        .select(
-            F.col("c_event_id").alias("click_event_id"),
-            F.col("p_event_id").alias("purchase_event_id"),
-            F.col("c_user_id").alias("user_id"),
-            F.expr("timestampdiff(MICROSECOND, c_ts, p_ts)").alias(
-                "gap_micros"
-            ),
-        )
-    )
-    name = f"stream_outer_{uuid.uuid4().hex[:8]}"
+    joined = _click_purchase_join(stream, "leftOuter")
     with _streaming_shuffle(spark):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        out = drain_to_memory(joined, "append", "stream_outer")
     # sentinel rows (negative user_id) drop HERE, on the sink table
-    return spark.table(name).filter(F.col("user_id") >= 0)
+    return out.filter(F.col("user_id") >= 0)
 
 
 # ---------------------------------------------------------------------------
 # Streaming decontamination gate (stream-static semi-join, stateless)
 # ---------------------------------------------------------------------------
-
-# sf_dir -> TemporaryDirectory holding the 2-file training-doc feed
-_DECON_FEED_DIRS: dict[str, object] = {}
 
 from dados_publicos_etl_spark.functions.text import (  # noqa: E402
     duck_shingles_sql as _duck_sh,
@@ -1215,27 +922,14 @@ def _doc_feed_dir(spark: SparkSession, sf_dir: str) -> str:
     maxFilesPerTrigger=1.  A document's rows live entirely in ONE
     file, so every per-doc decision completes within its own batch
     (the property that lets the gate run stateless)."""
-    import tempfile
 
-    key = (sf_dir, _fix_fp(sf_dir, "documents"))
-    with _FIX_LOCK:
-        hit = _DECON_FEED_DIRS.get(key)
-    if hit is not None:
-        return hit.name
-    tmp = tempfile.TemporaryDirectory(prefix="spark_decon_feed_")
-    docs = read_table(spark, sf_dir, "documents").filter(
-        F.col("source") != "src0"
-    )
-    for half in (0, 1):
-        (
-            docs.filter(F.col("doc_id") % 2 == half)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(tmp.name)
+    def build(out: str) -> None:
+        docs = read_table(spark, sf_dir, "documents").filter(
+            F.col("source") != "src0"
         )
-    with _FIX_LOCK:
-        stored = _DECON_FEED_DIRS.setdefault(key, tmp)
-    return stored.name
+        write_parity_feed(docs, "doc_id", out)
+
+    return cached_feed("decon", sf_dir, "documents", build)
 
 
 @query(
@@ -1292,10 +986,8 @@ def stream_decontaminate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(feed)
     )
-    state_dir = _STATE_DIRS.new_dir("decon_gate", "spark_decon_gate_")
-    state: dict = {"path": None, "version": 0}
 
-    def gate(bdf: DataFrame, _bid: int) -> None:
+    def gate(prev: DataFrame | None, bdf: DataFrame) -> DataFrame:
         sh = bdf.select("doc_id", tokens("text").alias("toks")).select(
             "doc_id",
             F.explode(shingles_from_tokens(F.col("toks"), n=4)).alias("s"),
@@ -1316,39 +1008,13 @@ def stream_decontaminate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.coalesce("n_shared", F.lit(0)) > 0).alias("contaminated"),
             )
         )
-        if state["path"] is not None:
-            prev = spark.read.parquet(state["path"])
-            merged = prev.join(out, ["doc_id"], "left_anti").unionByName(out)
-        else:
-            merged = out
-        state["version"] += 1
-        new_path = f"{state_dir}/v{state['version']}"
-        merged.write.mode("overwrite").parquet(new_path)
-        state["path"] = new_path
+        return _keyed_upsert(prev, out, ["doc_id"])
 
-    with _streaming_shuffle(spark):
-        q = stream.writeStream.outputMode("update").foreachBatch(gate).start()
-        try:
-            q.processAllAvailable()
-            _STREAM_LAST_RUNS["stream_decontaminate_gate"] = {
-                "output_mode": "update",
-                "n_batches": state["version"],
-                "stateless": True,
-                "progress": list(q.recentProgress or []),
-            }
-        finally:
-            q.stop()
-    cols = ["doc_id", "n_shared_shingles", "contaminated"]
-    if state["path"] is None:
+    gated = fold_batches(spark, stream, "stream_decontaminate_gate", gate)
+    if gated is None:
         return spark.createDataFrame([], "doc_id long").selectExpr(
             "doc_id",
             "CAST(0 AS LONG) AS n_shared_shingles",
             "CAST(false AS BOOLEAN) AS contaminated",
         )
-    # eager for the same TempDirPool-rotation reason as
-    # _run_update_upsert above
-    return (
-        spark.read.parquet(state["path"])
-        .select(*cols)
-        .localCheckpoint(eager=True)
-    )
+    return gated

@@ -4,17 +4,18 @@ Two repo-wide patterns write parquet to tempdirs whose lifetime
 outlives the writing function: datasource cuts in iterative loops
 (operators/graph.py — re-rooting a plan on a scan resets the
 self-join chain, see BENCH_NOTES "self-join chain degradation") and
-streaming foreachBatch state tables (streaming/windows.py, sinks.py
-— the returned DataFrame lazily reads the final state version).
+streaming state tables and sinks (streaming/source.py).
 
-Both previously accumulated one ``TemporaryDirectory`` handle per
-round/run for the process lifetime.  ``TempDirPool`` caps that: a
-rolling window of the newest ``keep`` dirs per purpose, older dirs
-deleted as new ones arrive (by the time a dir rotates out, its
-consumer has materialized — iterative loops eagerly localCheckpoint
-within a round or two, and a query result is collected before the
-same query has run ``keep`` more times), and whatever survives is
-removed atexit.
+``TempDirPool`` keeps a rolling window of the newest ``keep`` dirs per
+purpose, deletes older dirs as new ones arrive, and removes whatever
+survives atexit.  The lifetime rule for a pooled dir is therefore:
+it is readable until ``keep`` newer dirs of the same purpose exist,
+so its consumer materializes from it before returning.  Iterative
+loops eagerly localCheckpoint within a round or two; every streaming
+state table and sink dir comes from the one pool in
+``streaming.source`` and is read back through
+``localCheckpoint(eager=True)`` before the query returns, so no
+returned DataFrame ever reads a pooled dir.
 """
 
 from __future__ import annotations

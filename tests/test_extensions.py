@@ -963,14 +963,14 @@ def test_stream_topk_windows_state_is_watermark_bounded(spark):
     from pyspark.sql import functions as F
 
     from dados_publicos_etl_spark.io import read_table
-    from dados_publicos_etl_spark.streaming import windows as SW
+    from dados_publicos_etl_spark.streaming import source
 
     sf = SF_CORRECT
     got = sorted(
         tuple(r)
         for r in QUERIES["stream_topk_windows"].fn(spark, sf).collect()
     )
-    run = SW._TOPK_LAST_RUN
+    run = source._STREAM_LAST_RUNS["stream_topk_windows"]
     assert run["output_mode"] == "update"
     assert run["n_batches"] >= 2, "feed must drive multiple batches"
     removed = sum(
@@ -1998,12 +1998,12 @@ def test_stream_late_drop_measures_watermark_drops(spark, sf_dir):
     """The late-drop claim must be MEASURED: every earlier-half row
     arrives behind the watermark and numRowsDroppedByWatermark in the
     run's progress equals that half's row count exactly."""
-    import dados_publicos_etl_spark.streaming.windows as SW
     from dados_publicos_etl_spark.io import read_table
+    from dados_publicos_etl_spark.streaming import source
 
     out = QUERIES["stream_late_drop"].fn(spark, sf_dir)
     n_kept = out.count()
-    run = SW._STREAM_LAST_RUNS["stream_late_drop"]
+    run = source._STREAM_LAST_RUNS["stream_late_drop"]
     dropped = sum(
         s.get("numRowsDroppedByWatermark", 0)
         for p in run["progress"]
